@@ -59,10 +59,6 @@ class CellGrid:
         return BITS[len(self.bounds)]
 
     @property
-    def max_res(self) -> int:
-        return self.bits
-
-    @property
     def n(self) -> int:
         return 1 << self.res
 
@@ -146,21 +142,6 @@ def pick_resolution_by_count(n_rows: int, rows_per_cell: int = 8, ndim: int = 2)
         return 0
     res = int(math.ceil(math.log2(n_rows / rows_per_cell) / ndim))
     return max(0, min(BITS[ndim], res))
-
-
-def bounds_of(df: DataFrame, coords: Sequence[str] = ("x", "y")) -> Tuple[Tuple[float, float], ...]:
-    """One cheap agg over the input (column-pruned scan) for the bbox."""
-    aggs = []
-    for c in coords:
-        aggs += [F.min(c).alias(f"_lo_{c}"), F.max(c).alias(f"_hi_{c}")]
-    r = df.agg(*aggs).first()
-    out = []
-    for c in coords:
-        lo, hi = float(r[f"_lo_{c}"]), float(r[f"_hi_{c}"])
-        if hi <= lo:  # degenerate extents (all points equal) still need a box
-            hi = lo + 1.0
-        out.append((lo, hi))
-    return tuple(out)
 
 
 def with_cell(

@@ -45,8 +45,7 @@ Output columns: targets prefixed ``t_``, sources prefixed ``s_``, plus
 from __future__ import annotations
 
 import math
-import warnings
-from typing import Optional, Sequence, Tuple
+from typing import Optional, Sequence
 
 import numpy as np
 from pyspark.sql import DataFrame, Window
@@ -124,17 +123,7 @@ def _metric_join(join_fn, targets, sources, t_coords, s_coords,
         s_carry=tuple(dict.fromkeys([*sc, *s_carry])),
         **kw,
     )
-    res = out.drop(*[f"t_{c}" for c in mcols], *[f"s_{c}" for c in mcols])
-    # propagate the materialization marker across the Project: a drop() over
-    # a checkpointed result is a narrow projection, so "already materialized"
-    # stays true for the re-checkpoint decision in _selfjoin_dedup_1nn.
-    # Propagate ABSENCE too (don't default to False): an unstamped join_fn
-    # must stay observable as marker-less downstream, not look like a
-    # deliberate lazy route
-    mat = getattr(out, "_gst_materialized", None)
-    if mat is not None:
-        res._gst_materialized = mat
-    return res
+    return out.drop(*[f"t_{c}" for c in mcols], *[f"s_{c}" for c in mcols])
 
 
 def _union_bounds_and_counts(a: DataFrame, ac, b: DataFrame, bc):
@@ -357,7 +346,8 @@ def _sq_dists(T: "np.ndarray", S: "np.ndarray") -> "np.ndarray":
     difference flips the (dist, s_id) tie-break — the numpy paths would
     disagree with the JVM `_dist_expr`, which computes exactly these IEEE
     operations.  Difference form is bit-identical to the SQL path, so every
-    strategy (ladder / multires / broadcast / scan) returns the same rows.
+    route (dedup-1NN / broadcast / targets-scan / cell ladder) returns the
+    same rows.
     Cost vs gemm: ndim (n,m) temporaries instead of one — fine for 2-/3-D."""
     d2 = T[:, 0][:, None] - S[:, 0][None, :]
     np.multiply(d2, d2, out=d2)
@@ -494,8 +484,12 @@ def _bcast_targets_scan(
             S = pdf[list(sc)].to_numpy(dtype=float)
             s_ids = pdf[sid].to_numpy()
             nb = len(pdf)
-            t_chunk = max(256, CHUNK // max(nb, 1))
-            d_parts = []
+            t_chunk = max(1, CHUNK // nb)
+            # batch-local top-k per target chunk (rows are independent, so
+            # only the (chunk, kk_b) selections are kept), then merge into
+            # the accumulator lazily
+            kk_b = min(kk, nb)
+            o_parts, d_parts = [], []
             for lo in range(0, n_t, t_chunk):
                 hi = min(n_t, lo + t_chunk)
                 d = _sq_dists(T[lo:hi], S)  # squared
@@ -503,11 +497,10 @@ def _bcast_targets_scan(
                     d = np.where(t_ids[lo:hi, None] == s_ids[None, :], np.inf, d)
                 if max_radius is not None:
                     d = np.where(d <= float(max_radius) ** 2, d, np.inf)
-                d_parts.append(d)
-            d_all = np.concatenate(d_parts, axis=0)  # (n_t, nb) squared
-            # batch-local top-k, then merge into the accumulator lazily
-            kk_b = min(kk, nb)
-            order = _topk_tiebreak(d_all, s_ids, kk_b)
+                o = _topk_tiebreak(d, s_ids, kk_b)
+                o_parts.append(o)
+                d_parts.append(np.take_along_axis(d, o, axis=1))
+            order = np.concatenate(o_parts, axis=0)  # (n_t, kk_b)
             # keep ONLY the batch rows some target selected (≤ n_t·k, not
             # nb): retaining whole batches would accumulate the entire
             # source partition in pandas memory — the opposite of the
@@ -516,7 +509,7 @@ def _bcast_targets_scan(
             used = np.unique(order)
             inv = np.empty(nb, dtype=np.int64)
             inv[used] = np.arange(len(used))
-            acc_d.append(np.take_along_axis(d_all, order, axis=1))
+            acc_d.append(np.concatenate(d_parts, axis=0))
             acc_sidx.append(inv[order] + row_base)
             src_rows.append(pdf.iloc[used].reset_index(drop=True))
             row_base += len(used)
@@ -629,46 +622,29 @@ def _selfjoin_dedup_1nn(
     uniq_raw = marked.filter(F.col("_rn") == 1).select(
         *[F.col(f"s_{c}").alias(c) for c in dict.fromkeys(raw_cols)]
     )
-    inner = knn_join(
+    inner, materialized = _knn_dispatch(
         singles_raw, uniq_raw, 1,
         t_id=id_col, s_id=id_col, t_coords=coords, s_coords=coords,
-        t_carry=carry, s_carry=carry, exclude_same_id=True,
+        t_carry=carry, s_carry=carry, exclude_same_id=True, max_radius=None,
         rows_per_cell=rows_per_cell, salt_threshold=salt_threshold,
         broadcast_threshold=broadcast_threshold, finish_threshold=finish_threshold,
     )
 
-    # the generic path has already materialized `inner` (its own eager
-    # checkpoint) in the ladder case, so only the pile branch still
-    # references `marked` — checkpoint just that branch instead of
-    # re-materializing the whole union (saves a second full-result write).
-    # The broadcast / target-scan routes, however, return LAZY plans over
-    # `marked`'s lineage — unpersisting before the union would recompute the
-    # coordinate window (ADVICE r2).  knn_join marks materialized results
-    # (`_gst_materialized`), so the decision follows the actual route taken
+    # the ladder has already materialized `inner` (its own eager
+    # checkpoint), so only the pile branch still references `marked` —
+    # checkpoint just that branch instead of re-materializing the whole
+    # union (saves a second full-result write).  The broadcast / targets-scan
+    # routes, however, return LAZY plans over `marked`'s lineage —
+    # unpersisting before the union would recompute the coordinate window
+    # (ADVICE r2).  The decision follows the route `_knn_dispatch` reports
     # instead of re-deriving the routing conditions (ADVICE r3); the lazy
     # routes only trigger on small reduced sides, so the eager checkpoint
     # there is a bounded narrow write.
-    mat = getattr(inner, "_gst_materialized", None)
-    if mat is None:
-        # knn_join always stamps the marker on its returns; a missing marker
-        # means some interposed transformation rebuilt the DataFrame and
-        # dropped the Python-side attribute.  The conservative re-checkpoint
-        # below stays CORRECT either way — warn so the silent perf
-        # degradation (a second full-result write) is observable.
-        warnings.warn(
-            "_selfjoin_dedup_1nn: knn_join result lost its materialization "
-            "marker (interposed transformation?); re-checkpointing "
-            "conservatively",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-    if not mat:
+    if not materialized:
         inner = inner.localCheckpoint(eager=True)
     pile_out = pile_out.localCheckpoint(eager=True)
     marked.unpersist()
-    out = pile_out.unionByName(inner.select(*pile_out.columns))
-    out._gst_materialized = False  # the union itself is lazy (cheap: both legs are checkpointed)
-    return out
+    return pile_out.unionByName(inner.select(*pile_out.columns))
 
 
 def knn_join(
@@ -686,7 +662,6 @@ def knn_join(
     max_radius: Optional[float] = None,
     rows_per_cell: Optional[int] = None,
     salt_threshold: Optional[int] = 200_000,
-    max_rounds: int = 8,
     broadcast_threshold: int = 20_000,
     finish_threshold: int = 2_000,
     metric=None,
@@ -708,14 +683,18 @@ def knn_join(
     ``MetricBall`` knob (src/interpneighbors.jl:66).  ``max_radius`` and the
     output ``dist`` are then in metric units.
 
-    Physical strategy selection (the engine's §3.1-step-3 dispatch):
-    * self-join 1-NN with abundant exact-duplicate coordinates →
-      `_selfjoin_dedup_1nn` (UniqueCoords-style compression: coincident
+    Physical routes (the engine's §3.1-step-3 dispatch), all returning
+    the same rows:
+    * dedup-1NN — self-join 1-NN with abundant exact-duplicate coordinates
+      → `_selfjoin_dedup_1nn` (UniqueCoords-style compression: coincident
       rows resolve at distance 0 with no spatial search; only singleton
       coordinates search, against one row per unique coordinate);
-    * sources ≤ broadcast_threshold → `_broadcast_knn` (one narrow pass);
-    * otherwise → cell-ring candidate join with driver-looped exact
-      ring expansion and optional hot-cell salting.
+    * broadcast — sources ≤ broadcast_threshold → `_broadcast_knn` (one
+      narrow pass);
+    * targets-scan — targets ≤ finish_threshold → `_bcast_targets_scan`
+      (one streaming pass over the sources);
+    * cell ladder — otherwise: cell-ring candidate join with driver-looped
+      exact ring expansion and optional hot-cell salting.
     """
     if metric is not None:
         return _metric_join(
@@ -723,7 +702,7 @@ def knn_join(
             metric,
             dict(k=k, t_id=t_id, s_id=s_id, exclude_same_id=exclude_same_id,
                  max_radius=max_radius, rows_per_cell=rows_per_cell,
-                 salt_threshold=salt_threshold, max_rounds=max_rounds,
+                 salt_threshold=salt_threshold,
                  broadcast_threshold=broadcast_threshold,
                  finish_threshold=finish_threshold),
         )
@@ -736,11 +715,10 @@ def knn_join(
         and tuple(t_coords) == tuple(s_coords)
         and tuple(t_carry) == tuple(s_carry)
     ):
-        spark_df = targets
         # one narrow agg decides whether compression pays (≥10% duplicate
         # coordinate mass); without duplicates the coordinate window would be
         # a pure extra shuffle in front of an identical search
-        stats = spark_df.agg(
+        stats = targets.agg(
             F.count("*").alias("n"),
             F.approx_count_distinct(F.struct(*[F.col(c) for c in t_coords])).alias("u"),
         ).first()
@@ -751,7 +729,39 @@ def knn_join(
                 broadcast_threshold=broadcast_threshold,
                 finish_threshold=finish_threshold,
             )
+    out, _ = _knn_dispatch(
+        targets, sources, k,
+        t_id=t_id, s_id=s_id, t_coords=t_coords, s_coords=s_coords,
+        t_carry=t_carry, s_carry=s_carry, exclude_same_id=exclude_same_id,
+        max_radius=max_radius, rows_per_cell=rows_per_cell,
+        salt_threshold=salt_threshold, broadcast_threshold=broadcast_threshold,
+        finish_threshold=finish_threshold,
+    )
+    return out
 
+
+def _knn_dispatch(
+    targets: DataFrame,
+    sources: DataFrame,
+    k: int,
+    *,
+    t_id: str,
+    s_id: str,
+    t_coords: Sequence[str],
+    s_coords: Sequence[str],
+    t_carry: Sequence[str],
+    s_carry: Sequence[str],
+    exclude_same_id: bool,
+    max_radius: Optional[float],
+    rows_per_cell: Optional[int],
+    salt_threshold: Optional[int],
+    broadcast_threshold: int,
+    finish_threshold: int,
+) -> tuple[DataFrame, bool]:
+    """`knn_join`'s routes after the dedup check: broadcast, targets-scan
+    or the cell ladder.  Returns ``(out, materialized)``: the ladder's
+    result is already checkpointed (True); the broadcast and targets-scan
+    routes return lazy plans over their inputs (False)."""
     t = _prefixed(targets, "t_", t_coords, t_id, t_carry)
     s = _prefixed(sources, "s_", s_coords, s_id, s_carry)
     tc = [f"t_{c}" for c in t_coords]
@@ -763,15 +773,11 @@ def knn_join(
     if n_sources == 0:
         raise ValueError("knn_join: empty source side")
     if n_sources <= broadcast_threshold:
-        out = _broadcast_knn(t, s, k, tid, sid, tc, sc, exclude_same_id, max_radius)
-        out._gst_materialized = False  # lazy route: marker always present
-        return out
+        return _broadcast_knn(t, s, k, tid, sid, tc, sc, exclude_same_id, max_radius), False
     if n_targets <= finish_threshold:
         # few targets, many sources (e.g. InterpolateNeighbors onto a small
         # domain): one streaming scan beats building the cell index
-        out = _bcast_targets_scan(t, s, k, tid, sid, tc, sc, exclude_same_id, max_radius)
-        out._gst_materialized = False
-        return out
+        return _bcast_targets_scan(t, s, k, tid, sid, tc, sc, exclude_same_id, max_radius), False
     base_res = C.pick_resolution_by_count(n_sources, rows_per_cell or max(4, k), ndim)
     # skew guard: refine until the densest cell is bounded (see
     # _adaptive_cell_grid).  cap bounds ring-1 candidates per target at
@@ -802,10 +808,6 @@ def knn_join(
     # grows ×64/level) or in the overfull case — skip the per-join hot-cell
     # histogram (a driver collect) whenever the bound rules it out
     thr = salt_threshold if (salt_threshold and n_sources > salt_threshold) else None
-
-    import os as _os, time as _time
-
-    _dbg = _os.environ.get("SPARK_GRAFT_KNN_DEBUG")
     w = Window.partitionBy(tid).orderBy(F.col("dist"), F.col(sid))
 
     def _kbest(cand: DataFrame) -> DataFrame:
@@ -877,7 +879,6 @@ def knn_join(
         occ_bound = (occ_max if not overfull else n_sources) * ((1 << ndim) ** d)
         thr_L = thr if (thr and occ_bound > thr) else None
 
-        t0_ = _time.perf_counter()
         t_cells = C.kring_exploded(cur, gridL, 1, coords=tc, out="_cell")
         best = _kbest(_salted_cell_join(t_cells, sL, thr_L)).persist()
         persisted.append(best)
@@ -904,19 +905,11 @@ def knn_join(
         bestB = _kbest(_salted_cell_join(vb_cells, sL, thr_L)).drop("_cnt", "_kth")
         if t_payload:
             bestB = bestB.join(cur.select(tid, *t_payload), tid)
-        if _dbg:
-            _tv = _time.perf_counter()
-            print(f"[knn]   verify rows={bestB.count()} ({_time.perf_counter()-_tv:.2f}s)")
         pieces.append(bestB)
 
         resolved_ids = head.filter((F.col("_cnt") >= k) & (ring_col <= R_MAX)).select(tid)
         starved = cur.join(resolved_ids, tid, "left_anti")
         n_starved = starved.count()  # the level's one driver action
-        if _dbg:
-            print(
-                f"[knn] level res={gridL.res} targets={n_cur} starved={n_starved} "
-                f"({_time.perf_counter()-t0_:.2f}s)"
-            )
         if n_starved == 0:
             break
         # the scan touches n_remaining × n_sources distance pairs; a coarser
@@ -928,13 +921,9 @@ def knn_join(
             (n_starved <= finish_threshold and n_starved * n_sources <= scan_budget)
             or gridL.res == 0
         ):
-            scan_piece = _bcast_targets_scan(
+            pieces.append(_bcast_targets_scan(
                 starved, s, k, tid, sid, tc, sc, exclude_same_id, max_radius
-            )
-            if _dbg:
-                _ts = _time.perf_counter()
-                print(f"[knn]   scan rows={scan_piece.count()} ({_time.perf_counter()-_ts:.2f}s)")
-            pieces.append(scan_piece)
+            ))
             break
         # truncate lineage: each level's plan otherwise embeds every prior
         # level's anti-join, and planning time grows superlinearly
@@ -956,273 +945,6 @@ def knn_join(
     # they could not be unpersisted before the result is consumed).  The
     # checkpoint also makes repeated downstream consumption cheap.
     out = out.localCheckpoint(eager=True)
-    # signal materialization to wrappers (the dedup fast path keys its own
-    # checkpoint-vs-lazy decision on this instead of re-deriving the route
-    # selection above — ADVICE r3: duplicated routing logic diverges silently)
-    out._gst_materialized = True
     for p in persisted:
         p.unpersist()
-    return out
-
-
-def _leaf_assignment(s: DataFrame, sc: Sequence[str], grids: dict, cap: int) -> DataFrame:
-    """Quadtree leaf per source, computed from ONE fine-resolution histogram.
-
-    A source's leaf is the COARSEST ladder level whose containing cell holds
-    ≤ cap sources — dense regions stop splitting late (fine leaves), sparse
-    regions early (coarse leaves).  Leaves partition space and every leaf is
-    occupancy-bounded, so a candidate join against leaf-keyed sources can
-    never concentrate O(m²) pairs in one task.
-
-    All heavy ops run on (cell, count) pairs, never payload rows; the only
-    full source pass is the final fine-cell join attaching `_leaf_r`/`_leaf_cell`.
-    """
-    levels = sorted(grids)  # ascending res: coarse → fine
-    fine = max(levels)
-    gf = grids[fine]
-    fine_cell = gf.cell(*[F.col(c) for c in sc])
-    hist = s.groupBy(fine_cell.alias("_c")).count()
-
-    def anc(r):
-        return gf.parent(F.col("_c"), fine - r)
-
-    lv = hist.select(
-        "_c", "count", F.explode(F.array(*[F.lit(r) for r in levels])).alias("_r")
-    ).withColumn(
-        "_anc",
-        F.coalesce(
-            *[F.when(F.col("_r") == r, anc(r)) for r in levels]
-        ),
-    )
-    occ = lv.groupBy("_r", "_anc").agg(F.sum("count").alias("_occ"))
-    # coarsest admissible level per fine cell (min res among occ ≤ cap)
-    leaf = (
-        lv.join(occ, ["_r", "_anc"])
-        .filter(F.col("_occ") <= cap)
-        .groupBy("_c")
-        .agg(F.min(F.struct(F.col("_r").alias("r"), F.col("_anc").alias("c"))).alias("_l"))
-        .select(
-            F.col("_c"),
-            F.col("_l.r").alias("_leaf_r"),
-            F.col("_l.c").alias("_leaf_cell"),
-        )
-    )
-    # LEFT join with finest-level fallback: a fine cell overfull at every
-    # ladder level (> cap near-coincident-but-distinct points inside one
-    # finest cell, possible when the post-compression grid is still
-    # overfull) has no admissible leaf row — an inner join would silently
-    # drop those sources from the candidate pass and an exact-contract
-    # target could miss a strictly nearer neighbor.  Such cells stay at the
-    # finest level: occupancy exceeds cap there (one hot-ish task), but
-    # exactness is preserved.
-    return (
-        s.withColumn("_c", fine_cell)
-        .join(leaf, "_c", "left")
-        .withColumn("_leaf_r", F.coalesce(F.col("_leaf_r"), F.lit(fine)))
-        .withColumn("_leaf_cell", F.coalesce(F.col("_leaf_cell"), F.col("_c")))
-        .drop("_c")
-    )
-
-
-def knn_join_multires(
-    targets: DataFrame,
-    sources: DataFrame,
-    k: int,
-    *,
-    t_id: str = "row_id",
-    s_id: str = "row_id",
-    t_coords: Sequence[str] = ("x", "y"),
-    s_coords: Sequence[str] = ("x", "y"),
-    t_carry: Sequence[str] = (),
-    s_carry: Sequence[str] = (),
-    exclude_same_id: bool = False,
-    max_radius: Optional[float] = None,
-    rows_per_cell: Optional[int] = None,
-    broadcast_threshold: int = 20_000,
-    finish_threshold: int = 2_000,
-    level_step: int = 3,
-) -> DataFrame:
-    """Exact kNN join in TWO candidate passes instead of a driver-looped
-    level ladder (same result contract as :func:`knn_join`).
-
-    1.  **Multi-resolution candidate pass.**  Sources key once at their
-        quadtree LEAF (`_leaf_assignment`); targets explode a ring-1 at
-        every ladder level; one equi-join on (level, cell) yields ≤ 9·L·cap
-        candidates per target with zero driver round-trips.  Dense regions
-        contribute at fine levels, sparse fringes at coarse levels — the
-        same adaptivity the ladder reaches over several driver rounds.
-    2.  **Verify pass.**  Using the pass-1 k-th distance d₁ as an upper
-        bound, each unproven target re-searches at its own COARSEST level
-        whose ring count for d₁ is ≤ R_MAX — one equi-join against sources
-        keyed at every level (map-side explode), exactly covering the d₁
-        ball.  Proven targets (d₁ ≤ finest cell edge) skip it.
-    3.  Targets with < k candidates after pass 1 (near-empty neighborhoods
-        at every scale — needs fewer than k sources in the 3×3 of the
-        coarsest level) finish with the bounded streaming scan.
-
-    Driver actions: bounds+counts, the occupancy evaluation, and one
-    starved count — independent of data shape.
-    """
-    t = _prefixed(targets, "t_", t_coords, t_id, t_carry)
-    s = _prefixed(sources, "s_", s_coords, s_id, s_carry)
-    tc = [f"t_{c}" for c in t_coords]
-    sc = [f"s_{c}" for c in s_coords]
-    tid, sid = f"t_{t_id}", f"s_{s_id}"
-    ndim = len(tc)
-
-    bounds, n_targets, n_sources = _union_bounds_and_counts(t, tc, s, sc)
-    if n_sources == 0:
-        raise ValueError("knn_join: empty source side")
-    if n_sources <= broadcast_threshold:
-        return _broadcast_knn(t, s, k, tid, sid, tc, sc, exclude_same_id, max_radius)
-    if n_targets <= finish_threshold:
-        return _bcast_targets_scan(t, s, k, tid, sid, tc, sc, exclude_same_id, max_radius)
-
-    base_res = C.pick_resolution_by_count(n_sources, rows_per_cell or max(4, k), ndim)
-    # measured at 2M bench anchors (PLANS.md round 2): cap 8 beats 16 by
-    # ~20% at local[8] AND ~26% at local[2] for k=1 (candidate volume scales
-    # with cap; too-fine cap 4 re-adds ladder rounds and loses it back)
-    cap = max(8, 4 * k)
-    grid, overfull, occ_max = _adaptive_cell_grid(s, sc, bounds, base_res, cap)
-    if overfull:
-        w_coin = Window.partitionBy(*sc).orderBy(sid)
-        s = (
-            s.withColumn("_rn", F.row_number().over(w_coin))
-            .filter(F.col("_rn") <= k + 1)
-            .drop("_rn")
-        )
-        grid, _, occ_max = _adaptive_cell_grid(s, sc, bounds, base_res, cap)
-
-    # ladder: finest (occupancy-bounded) res down to ~0, step ×2^level_step
-    levels = []
-    r = grid.res
-    while r > 0:
-        levels.append(r)
-        r -= level_step
-    levels.append(0)
-    grids = {r: C.CellGrid(bounds, r) for r in levels}
-    s = s.persist()
-    s_leaf = _leaf_assignment(s, sc, grids, cap).persist()
-    persisted = [s, s_leaf]
-
-    w = Window.partitionBy(tid).orderBy(F.col("dist"), F.col(sid))
-
-    def _kbest(cand: DataFrame, with_stats: bool) -> DataFrame:
-        cand = cand.withColumn(
-            "dist", _dist_expr([F.col(c) for c in tc], [F.col(c) for c in sc])
-        )
-        if max_radius is not None:
-            cand = cand.filter(F.col("dist") <= F.lit(float(max_radius)))
-        if exclude_same_id:
-            cand = cand.filter(F.col(tid) != F.col(sid))
-        if k == 1:
-            other = [
-                c for c in cand.columns
-                if c not in (tid, "dist", sid, "_r", "_cell", "_leaf_r", "_leaf_cell")
-            ]
-            packed = cand.groupBy(tid).agg(
-                F.min(F.struct(F.col("dist"), F.col(sid), *[F.col(c) for c in other])).alias("_b"),
-                F.count("*").alias("_cnt"),
-            )
-            out = packed.select(
-                tid,
-                F.col(f"_b.{sid}").alias(sid),
-                F.col("_b.dist").alias("dist"),
-                *[F.col(f"_b.{c}").alias(c) for c in other],
-                F.lit(1).alias("rank"),
-                F.col("_cnt"),
-                F.col("_b.dist").alias("_kth"),
-            )
-            return out if with_stats else out.drop("_cnt", "_kth")
-        ranked = cand.withColumn("rank", F.row_number().over(w)).withColumn(
-            "_cnt", F.count("*").over(Window.partitionBy(tid))
-        )
-        topk = ranked.filter(F.col("rank") <= k).drop("_r", "_cell", "_leaf_r", "_leaf_cell")
-        out = topk.withColumn("_kth", F.max("dist").over(Window.partitionBy(tid)))
-        return out if with_stats else out.drop("_cnt", "_kth")
-
-    # ---- pass 1: one candidate join across every ladder level -----------
-    lvl_arr = F.array(*[F.lit(r) for r in levels])
-    tl = t.withColumn("_r", F.explode(lvl_arr))
-    ring1 = None
-    for r in levels:
-        piece = C.kring_exploded(
-            tl.filter(F.col("_r") == r), grids[r], 1, coords=tc, out="_cell"
-        )
-        ring1 = piece if ring1 is None else ring1.unionByName(piece)
-    cand1 = ring1.join(
-        s_leaf,
-        (F.col("_r") == F.col("_leaf_r")) & (F.col("_cell") == F.col("_leaf_cell")),
-    )
-    best = _kbest(cand1, with_stats=True).persist()
-    persisted.append(best)
-
-    guaranteed = grids[max(levels)].min_cell_edge
-    proven = best.filter((F.col("_cnt") >= k) & (F.col("_kth") <= F.lit(guaranteed))).drop(
-        "_cnt", "_kth"
-    )
-
-    head = best.filter(F.col("rank") == 1).select(tid, *tc, "_kth", "_cnt")
-
-    # ---- pass 2: verify each unproven target at its own level -----------
-    R_MAX = {1: 16, 2: 6, 3: 3}.get(ndim, 2)
-    # coarsest level whose ring count for the target's d1 ball is ≤ R_MAX
-    lvl_expr = None
-    ring_expr = None
-    for r in sorted(levels):  # coarse → fine; keep the finest admissible
-        need = F.ceil(F.col("_kth") / F.lit(grids[r].min_cell_edge)).cast("int") + F.lit(1)
-        cond = need <= R_MAX
-        lvl_expr = F.when(cond, F.lit(r)) if lvl_expr is None else F.when(cond, F.lit(r)).otherwise(lvl_expr)
-        ring_expr = F.when(cond, need) if ring_expr is None else F.when(cond, need).otherwise(ring_expr)
-    unproven = head.filter((F.col("_cnt") >= k) & (F.col("_kth") > F.lit(guaranteed)))
-    verify_t = unproven.select(
-        tid, *tc, lvl_expr.alias("_vr"), ring_expr.alias("_ring")
-    )
-    vparts = None
-    for r in levels:
-        sub = verify_t.filter(F.col("_vr") == r)
-        pc = C.kring_exploded_var(sub, grids[r], "_ring", coords=tc, out="_cell").drop(
-            "_ring"
-        )
-        vparts = pc if vparts is None else vparts.unionByName(pc)
-    # sources keyed at every level, map-side explode (projection only)
-    s_all = s.withColumn("_vr", F.explode(lvl_arr))
-    cellv = None
-    for r in levels:
-        e = grids[r].cell(*[F.col(c) for c in sc])
-        cellv = F.when(F.col("_vr") == r, e) if cellv is None else F.when(F.col("_vr") == r, e).otherwise(cellv)
-    s_all = s_all.withColumn("_cell", cellv)
-    cand2 = vparts.join(s_all, ["_vr", "_cell"]).drop("_vr")
-    bestB = _kbest(cand2, with_stats=False)
-    t_payload = [c for c in t.columns if c not in (tid, *tc)]
-    if t_payload:
-        bestB = bestB.join(t.select(tid, *t_payload), tid)
-
-    # ---- pass 3: starved remainder (scan) -------------------------------
-    # a target counts as resolved only if it is proven OR has an admissible
-    # verify level: lvl_expr has no final otherwise, so when even res 0
-    # needs a ring > R_MAX (extreme bbox aspect ratios make _kth approach
-    # the diagonal while the res-0 cell edge is the SHORT extent) _vr is
-    # NULL — such targets match no verify branch and must fall through to
-    # the scan instead of silently vanishing (mirrors the ladder's
-    # ring_col <= R_MAX guard in its resolved_ids)
-    resolved_ids = head.filter(
-        (F.col("_cnt") >= k) & lvl_expr.isNotNull()
-    ).select(tid)
-    starved = t.join(resolved_ids, tid, "left_anti")
-    n_starved = starved.count()  # the one driver action of the core path
-    pieces = [proven, bestB]
-    if n_starved > 0:
-        pieces.append(
-            _bcast_targets_scan(
-                starved, s, k, tid, sid, tc, sc, exclude_same_id, max_radius
-            )
-        )
-    out = pieces[0]
-    for p_ in pieces[1:]:
-        out = out.unionByName(p_, allowMissingColumns=False)
-    # materialize once, then release the caches (see knn_join)
-    out = out.localCheckpoint(eager=True)
-    for p_ in persisted:
-        p_.unpersist()
-    return out
+    return out, True

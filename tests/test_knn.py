@@ -1,6 +1,9 @@
 """kNN/radius join service tests: physical-path equivalence (broadcast vs
 cell-ring), exactness vs numpy, skew handling."""
 
+import warnings
+from collections import Counter
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -22,6 +25,10 @@ def pts(spark):
 
 def _pairs(df):
     return {(r["t_row_id"], r["rank"]): (r["s_row_id"], round(r["dist"], 9)) for r in df.collect()}
+
+
+def _exact_pairs(df):
+    return {(r["t_row_id"], r["rank"]): (r["s_row_id"], r["dist"]) for r in df.collect()}
 
 
 @pytest.mark.parametrize("k", [1, 3])
@@ -76,14 +83,21 @@ def test_salting_preserves_results(spark, pts):
     assert _pairs(plain) == _pairs(salted)
 
 
-def test_multires_extreme_aspect_no_dropped_targets(spark):
+def _sorted_pairs(df):
+    return (
+        df.select("t_row_id", "s_row_id", "rank")
+        .toPandas()
+        .sort_values(["t_row_id", "rank"], ignore_index=True)
+    )
+
+
+def test_ladder_extreme_aspect_no_dropped_targets(spark):
     """Regression: a bbox with aspect ratio ~1000:1 plus isolated targets
-    whose k-th candidate distance exceeds R_MAX rings even at res 0 used to
-    make the verify-level expression NULL — the targets matched no verify
-    branch yet were counted resolved, so they silently vanished from an
-    exact join.  They must fall through to the scan instead."""
+    whose k-th candidate distance exceeds R_MAX rings even at res 0 (the
+    res-0 cell edge is the SHORT extent).  The ladder's `ring_col <= R_MAX`
+    guard must send them to the scan instead of counting them resolved, so
+    every target keeps its k exact neighbors."""
     import pandas as pd
-    from geostatstransforms_jl_spark.functions.knn import knn_join, knn_join_multires
 
     rng = np.random.default_rng(5)
     blob = np.column_stack([rng.random(24000), rng.random(24000)])  # [0,1]²
@@ -96,30 +110,28 @@ def test_multires_extreme_aspect_no_dropped_targets(spark):
     df = spark.createDataFrame(pdf).repartition(8).persist()
     df.count()
     n = len(pdf)
-    out = knn_join_multires(df, df, k=3, exclude_same_id=True, broadcast_threshold=0)
-    got = (
-        out.select("t_row_id", "s_row_id", "rank")
-        .toPandas()
-        .sort_values(["t_row_id", "rank"], ignore_index=True)
-    )
-    assert got["t_row_id"].nunique() == n, "targets dropped"
-    ladder = (
-        knn_join(df, df, k=3, exclude_same_id=True, broadcast_threshold=0)
-        .select("t_row_id", "s_row_id", "rank")
-        .toPandas()
-        .sort_values(["t_row_id", "rank"], ignore_index=True)
-    )
-    assert got.equals(ladder)
+    got = knn_join(df, df, k=3, exclude_same_id=True, broadcast_threshold=0).collect()
+    rows_per_t = Counter(r["t_row_id"] for r in got)
+    assert len(rows_per_t) == n and set(rows_per_t.values()) == {3}, "targets dropped"
+    by_t = {(r["t_row_id"], r["rank"]): (r["s_row_id"], r["dist"]) for r in got}
+    sample = list(range(n - 5, n)) + list(range(0, n - 5, 997))
+    for t in sample:
+        D = np.sqrt(((xy - xy[t]) ** 2).sum(axis=1))
+        D[t] = np.inf
+        order = np.lexsort((np.arange(n), D))[:3]
+        for rank, s in enumerate(order, start=1):
+            sid, dist = by_t[(t, rank)]
+            assert sid == s, (t, rank)
+            assert dist == pytest.approx(D[s], abs=1e-9)
     df.unpersist()
 
 
-def test_multires_overfull_finest_cell_keeps_sources(spark):
-    """Regression: > cap distinct-but-near-coincident sources inside one
-    finest-resolution cell have no admissible quadtree leaf; the old inner
-    join dropped them from the candidate pass, so nearby targets missed
-    strictly nearer neighbors.  They must be kept at the finest level."""
+def test_ladder_overfull_finest_cell_keeps_sources(spark):
+    """> cap distinct-but-near-coincident sources inside one finest-resolution
+    cell (no grid can split them, and they are not exact duplicates either):
+    the ladder must equal the broadcast route row for row, and the pile's
+    targets must find their neighbors inside the pile."""
     import pandas as pd
-    from geostatstransforms_jl_spark.functions.knn import knn_join, knn_join_multires
 
     rng = np.random.default_rng(9)
     uni = np.column_stack([rng.random(6000) * 100, rng.random(6000) * 100])
@@ -133,33 +145,22 @@ def test_multires_overfull_finest_cell_keeps_sources(spark):
     )
     df = spark.createDataFrame(pdf).repartition(8).persist()
     df.count()
-    a = (
-        knn_join(df, df, k=3, exclude_same_id=True, broadcast_threshold=0)
-        .select("t_row_id", "s_row_id", "rank")
-        .toPandas()
-        .sort_values(["t_row_id", "rank"], ignore_index=True)
-    )
-    b = (
-        knn_join_multires(df, df, k=3, exclude_same_id=True, broadcast_threshold=0)
-        .select("t_row_id", "s_row_id", "rank")
-        .toPandas()
-        .sort_values(["t_row_id", "rank"], ignore_index=True)
-    )
+    a = _sorted_pairs(knn_join(df, df, k=3, exclude_same_id=True, broadcast_threshold=0))
+    b = _sorted_pairs(knn_join(df, df, k=3, exclude_same_id=True))  # 6030 sources: broadcast
     assert a.equals(b)
     # the pile's own neighbors must come from the pile (distances ~1e-9),
     # not from the uniform background
     pile_ids = set(range(6000, 6030))
-    pile_rows = b[b["t_row_id"].isin(pile_ids)]
+    pile_rows = a[a["t_row_id"].isin(pile_ids)]
     assert set(pile_rows["s_row_id"]) <= pile_ids
     df.unpersist()
 
 
-def test_multires_matches_ladder(spark):
-    """knn_join_multires (two-pass quadtree-leaf strategy) must equal the
-    level-ladder knn_join row-for-row, including tie-breaks, on skewed data."""
-    import numpy as np
+def test_ladder_matches_broadcast_on_skew(spark):
+    """The cell ladder (with salting) must equal the broadcast route row for
+    row, including tie-breaks, on two-scale skewed data with a coincident
+    pile."""
     import pandas as pd
-    from geostatstransforms_jl_spark.functions.knn import knn_join, knn_join_multires
 
     rng = np.random.default_rng(11)
     n = 6000
@@ -170,22 +171,68 @@ def test_multires_matches_ladder(spark):
     pdf = pd.DataFrame({"row_id": np.arange(n, dtype=np.int64), "x": x, "y": y})
     df = spark.createDataFrame(pdf).repartition(8).persist()
     df.count()
+    src = df.select("*")  # a distinct object keeps k=1 off the dedup route
     for k in (1, 3):
-        a = (
-            knn_join(df, df, k=k, exclude_same_id=True, broadcast_threshold=0,
+        a = _sorted_pairs(
+            knn_join(df, src, k=k, exclude_same_id=True, broadcast_threshold=0,
                      salt_threshold=5000)
-            .select("t_row_id", "s_row_id", "rank")
-            .toPandas()
-            .sort_values(["t_row_id", "rank"], ignore_index=True)
         )
-        b = (
-            knn_join_multires(df, df, k=k, exclude_same_id=True, broadcast_threshold=0)
-            .select("t_row_id", "s_row_id", "rank")
-            .toPandas()
-            .sort_values(["t_row_id", "rank"], ignore_index=True)
-        )
-        assert a.equals(b), f"k={k}: multires != ladder"
+        b = _sorted_pairs(knn_join(df, src, k=k, exclude_same_id=True))  # broadcast
+        assert a.equals(b), f"k={k}: ladder != broadcast"
     df.unpersist()
+
+
+@pytest.fixture(scope="module")
+def pts6k(spark):
+    rng = np.random.default_rng(41)
+    n = 6000
+    xy = rng.random((n, 2)) * 100
+    xy[: n // 4] = rng.random((n // 4, 2)) * 0.2  # dense blob
+    rows = [(i, float(x), float(y)) for i, (x, y) in enumerate(xy)]
+    df = spark.createDataFrame(rows, "row_id long, x double, y double")
+    # two source partitions of ~3000 rows: each Arrow batch is then split
+    # into ~1400-target chunks, so 6000 targets span five chunks
+    return df.repartition(2).persist()
+
+
+@pytest.mark.parametrize("k", [1, 3])
+def test_scan_route_matches_broadcast(spark, pts6k, k):
+    """The targets-scan route over several target chunks per source batch
+    returns the broadcast route's rows bit for bit (ids, ranks, dists)."""
+    src = pts6k.select("*")
+    scan = knn_join(pts6k, src, k=k, exclude_same_id=True,
+                    broadcast_threshold=0, finish_threshold=6000)
+    bc = knn_join(pts6k, src, k=k, exclude_same_id=True)
+    # the scan route ranks its per-partition candidates with a window
+    assert "Window" in scan._jdf.queryExecution().executedPlan().toString()
+    assert "Window" not in bc._jdf.queryExecution().executedPlan().toString()
+    a, b = _exact_pairs(scan), _exact_pairs(bc)
+    assert len(a) == k * 6000
+    assert a == b
+
+
+def test_dispatch_reports_materialized(spark, pts):
+    """`_knn_dispatch` reports whether its result is already checkpointed:
+    True on the cell ladder, False on the lazy broadcast and scan routes —
+    and the flag matches the plan it returns."""
+    from geostatstransforms_jl_spark.functions.knn import _knn_dispatch
+
+    kw = dict(t_id="row_id", s_id="row_id", t_coords=("x", "y"), s_coords=("x", "y"),
+              t_carry=(), s_carry=(), exclude_same_id=True, max_radius=None,
+              rows_per_cell=None, salt_threshold=None)
+    routes = {
+        "ladder": dict(broadcast_threshold=0, finish_threshold=2000),
+        "broadcast": dict(broadcast_threshold=20_000, finish_threshold=0),
+        "scan": dict(broadcast_threshold=0, finish_threshold=3000),
+    }
+    results = {}
+    for name, thr in routes.items():
+        out, materialized = _knn_dispatch(pts, pts.select("*"), 1, **kw, **thr)
+        assert materialized is (name == "ladder"), name
+        leaf = out._jdf.queryExecution().analyzed().toString().lstrip().startswith("LogicalRDD")
+        assert leaf is materialized, name
+        results[name] = _pairs(out)
+    assert results["ladder"] == results["broadcast"] == results["scan"]
 
 
 def test_lattice_ties_paths_bitwise_agree(spark):
@@ -259,17 +306,6 @@ def test_knn3d_paths_agree_and_exact(spark, pts3d, k):
             assert dist == pytest.approx(D[t, s], abs=1e-9)
 
 
-def test_knn3d_multires_matches_ladder(spark, pts3d):
-    from geostatstransforms_jl_spark.functions.knn import knn_join_multires
-
-    coords = ("x", "y", "z")
-    a = _pairs(knn_join(pts3d, pts3d, k=2, t_coords=coords, s_coords=coords,
-                        exclude_same_id=True, broadcast_threshold=0))
-    b = _pairs(knn_join_multires(pts3d, pts3d, k=2, t_coords=coords, s_coords=coords,
-                                 exclude_same_id=True, broadcast_threshold=0))
-    assert a == b
-
-
 def test_radius3d_exact(spark, pts3d):
     out = radius_join(pts3d, pts3d, radius=1.5, t_coords=("x", "y", "z"),
                       s_coords=("x", "y", "z"), exclude_same_id=True)
@@ -302,13 +338,21 @@ def test_selfjoin_dedup_fast_path_matches_generic(spark):
     })
     df = spark.createDataFrame(pdf).repartition(8).persist()
     df.count()
-    fast = knn_join(df, df, k=1, exclude_same_id=True, t_carry=("v",), s_carry=("v",))
     # distinct objects defeat the self-join detection → generic path
     df2 = df.select("*")
     slow = knn_join(df, df2, k=1, exclude_same_id=True, t_carry=("v",), s_carry=("v",))
-    a = {r["t_row_id"]: (r["s_row_id"], round(r["dist"], 9), r["s_v"]) for r in fast.collect()}
     b = {r["t_row_id"]: (r["s_row_id"], round(r["dist"], 9), r["s_v"]) for r in slow.collect()}
-    assert a == b
+    # the reduced singleton search takes the broadcast route (lazy result,
+    # re-checkpointed by the fast path) or the ladder (already materialized)
+    for kw in (dict(), dict(broadcast_threshold=0)):
+        with warnings.catch_warnings(record=True) as caught:
+            warnings.simplefilter("always")
+            fast = knn_join(df, df, k=1, exclude_same_id=True,
+                            t_carry=("v",), s_carry=("v",), **kw)
+            a = {r["t_row_id"]: (r["s_row_id"], round(r["dist"], 9), r["s_v"])
+                 for r in fast.collect()}
+        assert not [w for w in caught if issubclass(w.category, RuntimeWarning)]
+        assert a == b, kw
     df.unpersist()
 
 
