@@ -12,17 +12,16 @@ Per-query seconds are interleaved best-of-``$SPARK_GRAFT_BENCH_REPS``
 (default 2) and ``value`` is their sum; the raw timings per run are kept in
 ``query_runs``.
 
-``--scaling`` mode evidences the north rule's two-cluster-size criterion in
-this single-node sandbox: the same job runs at two parallelism levels
-(local[8] vs local[32]) in fresh subprocesses, and the throughputs plus
-scaling efficiency are printed and appended to BENCH/BASELINE.md.
+``--image-workload``, ``--stress`` and ``--knn2m`` run one job each.  The
+scaling pairs (the same job at several parallelism levels, in fresh JVMs)
+come from ``python scripts/scaling.py <surface>``; its ``image`` and
+``media`` surfaces time this module's image and media stages.
 """
 
 from __future__ import annotations
 
 import json
 import os
-import subprocess
 import sys
 import time
 
@@ -225,7 +224,7 @@ def _image_stages(spark, n_images: int, cpus: int, source_path: str | None = Non
     # consume every rollup column through a second summing aggregate — a bare
     # .count() would let Catalyst prune count(*) AND the countDistinct out of
     # the lower aggregate, timing a distinct-zkey job instead of the
-    # documented per-cell rollup (same shape as scripts/cells_scaling.py)
+    # documented per-cell rollup (same shape as scripts/scaling.py cells)
     cell_totals = (
         tile_cells(pts, grid, distinct_col="phash", exact_distinct=True)
         .agg(F.count("*").alias("cells"), F.sum("n_rows").alias("rows"),
@@ -485,84 +484,6 @@ def knn2m(cpus: str = None, n_images: int = 2_000_000, reps: int = 2) -> dict:
     return out
 
 
-def calibrate(levels=("1", "2", "4", "8", "32")) -> dict:
-    """Machine ceiling: a pure-JVM compute job (sha2 over range) at several
-    parallelism levels.  This sandbox's 32 vCPUs are host-oversubscribed —
-    the same work burns ~2.5× more CPU-seconds at 32 threads — so the honest
-    N→4N demonstration uses levels the hardware truthfully provides
-    (measured: 2→8 ≈ 0.93 efficiency, 8→32 ≈ 0.39)."""
-    from pyspark.sql import SparkSession, functions as F
-
-    out = {}
-    for n in levels:
-        s = (
-            SparkSession.builder.master(f"local[{n}]").appName(f"calib{n}")
-            .config("spark.ui.enabled", "false")
-            .config("spark.driver.memory", "16g")
-            .config("spark.sql.shuffle.partitions", str(n))
-            .getOrCreate()
-        )
-        s.range(10).count()
-        t0 = time.perf_counter()
-        s.range(120_000_000, numPartitions=8 * int(n)).select(
-            F.sum(
-                F.conv(F.substring(F.sha2(F.col("id").cast("string"), 256), 1, 4), 16, 10).cast("long")
-            )
-        ).collect()
-        out[n] = round(time.perf_counter() - t0, 2)
-        s.stop()
-    return out
-
-
-def run_scaling(low: str = "2", high: str = "8") -> dict:
-    """Same job at two parallelism levels (N vs 4N) in fresh subprocesses
-    (fresh JVMs so neither run reuses the other's caches) — the sandbox
-    substitute for N vs 4N executors per the driver instruction.  Pick the
-    pair from the same-day `calibrate` ceilings: local[1]→local[4] is the
-    pair this host can truthfully provide 4× CPU for (ceiling ~0.94;
-    2→8 ≈ 0.88, 8→32 collapses under vCPU oversubscription).  Larger
-    workloads amortize the shuffle stages' bandwidth-flat cost (see
-    BENCH/BASELINE.md round-2 analysis), so run the biggest image count
-    the wall-clock allows via SPARK_GRAFT_BENCH_IMAGES."""
-    n_images = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "80000"))
-    reps = int(os.environ.get("SPARK_GRAFT_SCALE_REPS", "2"))
-    out = {}
-    # the host oversubscribes its vCPUs and background load swings wall-clock
-    # ±3×; interleave the two levels and keep each level's BEST run so a
-    # noisy-neighbor burst doesn't land on one level only
-    for rep in range(reps):
-        for cpus in (low, high):
-            # 16g: enough to avoid spills at 32 concurrent tasks, small enough
-            # to avoid the G1 large-heap pause pathology we measured at 48g
-            env = dict(os.environ, SPARK_GRAFT_CPUS=cpus,
-                       SPARK_GRAFT_BENCH_IMAGES=str(n_images),
-                       SPARK_GRAFT_DRIVER_MEM=os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g"))
-            r = subprocess.run(
-                [sys.executable, __file__, "--image-workload"],
-                env=env,
-                capture_output=True,
-                text=True,
-            )
-            lines = [l for l in r.stdout.strip().splitlines() if l.startswith("{")]
-            if not lines:
-                raise RuntimeError(f"scaling run failed at local[{cpus}]: {r.stderr[-2000:]}")
-            res = json.loads(lines[-1])
-            if cpus not in out or res["images_per_sec"] > out[cpus]["images_per_sec"]:
-                out[cpus] = res
-    tl, th = out[low]["images_per_sec"], out[high]["images_per_sec"]
-    ratio = int(high) / int(low)
-    eff = (th / tl) / ratio
-    return {
-        "metric": "scaling efficiency (local[%s] -> local[%s])" % (low, high),
-        "value": round(eff, 3),
-        "unit": "efficiency",
-        "images": n_images,
-        "throughput_low_img_s": tl,
-        "throughput_high_img_s": th,
-        "detail": out,
-    }
-
-
 if __name__ == "__main__":
     if "--stress" in sys.argv:
         print(json.dumps(stress()))
@@ -571,21 +492,5 @@ if __name__ == "__main__":
     elif "--image-workload" in sys.argv:
         n = int(os.environ.get("SPARK_GRAFT_BENCH_IMAGES", "20000"))
         print(json.dumps(image_workload(CPUS, n)))
-    elif "--calibrate" in sys.argv:
-        print(json.dumps(calibrate()))
-    elif "--scaling" in sys.argv:
-        low = os.environ.get("SPARK_GRAFT_SCALE_LOW", "2")
-        high = os.environ.get("SPARK_GRAFT_SCALE_HIGH", "8")
-        res = run_scaling(low, high)
-        print(json.dumps(res))
-        os.makedirs(os.path.join(REPO, "BENCH"), exist_ok=True)
-        lo, hi = res["detail"][low], res["detail"][high]
-        with open(os.path.join(REPO, "BENCH", "BASELINE.md"), "a") as f:
-            f.write(
-                f"| image spatial-join+tile-assignment ({res['images']} imgs) | "
-                f"local[{low}]: {lo['images_per_sec']} img/s ({lo['sec']}s) | "
-                f"local[{high}]: {hi['images_per_sec']} img/s ({hi['sec']}s) | "
-                f"efficiency {res['value']} |\n"
-            )
     else:
         print(json.dumps(run_bench()))

@@ -62,6 +62,12 @@ def hash_split(
     return df.withColumn(out, expr)
 
 
+def _floor_div(a, b: int):
+    """``floor(a / b)`` for a long column ``a`` and ``b > 0`` in exact long
+    arithmetic, negative ``a`` included (``div`` truncates toward zero)."""
+    return F.call_function("div", a, F.lit(b)) - (a % F.lit(b) < 0).cast("long")
+
+
 def chunk_pack(
     df: DataFrame,
     chunk_size: int,
@@ -105,8 +111,11 @@ def chunk_pack(
     """
     if chunk_size <= 0:
         raise ValueError(f"chunk_pack: chunk_size must be positive, got {chunk_size}")
+    for c in ("chunk_id", "chunk_offset", "n_chunks", "_shard", "_local_end", "_before"):
+        if c in df.columns:
+            raise ValueError(f"chunk_pack: input already has a {c!r} column")
     if shard_expr is None:
-        shard_expr = F.floor(F.col(order_col).cast("long") / F.lit(shard_size))
+        shard_expr = _floor_div(F.col(order_col).cast("long"), shard_size)
     toks = F.col(tokens_col).cast("long")
 
     keyed = df.withColumn("_shard", shard_expr)
@@ -138,12 +147,12 @@ def chunk_pack(
     start = F.col("_before") + F.col("_local_end") - toks
     return (
         local.join(F.broadcast(prefix), "_shard")
-        .withColumn("chunk_id", F.floor(start / chunk_size))
+        .withColumn("chunk_id", _floor_div(start, chunk_size))
         .withColumn("chunk_offset", start - F.col("chunk_id") * chunk_size)
         .withColumn(
             "n_chunks",
             F.when(toks == 0, F.lit(0).cast("long")).otherwise(
-                F.floor((start + toks - 1) / chunk_size) - F.col("chunk_id") + 1
+                _floor_div(start + toks - 1, chunk_size) - F.col("chunk_id") + 1
             ),
         )
         .drop("_shard", "_local_end", "_before")
@@ -173,8 +182,8 @@ def chunk_pack_sorted(
     narrow ``mapInPandas`` that streams each fragment in order, carrying a
     running offset.  No exchange touches the data, so the job scales at
     the scan ceiling — the route to prefer at 100-TB scale whenever the
-    table layout qualifies (measured: scripts/packing_scaling.py
-    ``sorted`` route).
+    table layout qualifies (measured: ``scripts/scaling.py packing
+    --route sorted``).
 
     The layout contract is VERIFIED, not assumed, and fails loudly toward
     the generic route:
@@ -217,6 +226,12 @@ def chunk_pack_sorted(
         .collect()
     )
     frags = [r for r in stats if r["n"] > 0]
+    if any(r["kmin"] is None for r in frags):
+        raise ValueError(
+            f"chunk_pack_sorted: a fragment's {order_col!r} keys are all "
+            "NULL — NULL keys are unorderable; layout contract violated; use "
+            "the generic chunk_pack route"
+        )
     if frags and all(r["_gst_file"] == "" for r in frags):
         raise ValueError(
             "chunk_pack_sorted: input is not a file-source scan "

@@ -527,6 +527,64 @@ def test_chunk_pack_plan_shape(spark):
         chunk_pack(toks, 0, "n_toks")
 
 
+def test_chunk_pack_exact_above_2_53(spark, tmp_path):
+    from geostatstransforms_jl_spark.textops import chunk_pack, chunk_pack_sorted
+
+    # running offsets far above 2^53, where a double no longer holds every
+    # integer: the second doc starts at big - 1, which a double rounds up to
+    # the multiple of 1000 `big`.  Negative ids and ids above 2^53 exercise
+    # the default shard key.  Both routes must equal exact Python-int replay.
+    big = 128_000 * (2**60 // 128_000)
+    ids = [-(2**62), -7, -1, 0, 5, 2**53 + 1, 2**60 + 3, 2**62 + 9]
+    toks = [big - 1, 2**58 + 3, 0, 999, 2**59 + 17, 1, 2**57 - 1, 1001]
+    path = str(tmp_path / "big_offsets")
+    (spark.createDataFrame(list(zip(ids, toks)), "doc_id long, n_toks long")
+     .repartitionByRange(3, "doc_id").sortWithinPartitions("doc_id")
+     .write.parquet(path))
+    src = spark.read.parquet(path)
+    want, start = {}, 0
+    for did, t in zip(ids, toks):  # ids are in order
+        cid = start // 1000
+        want[did] = (cid, start - cid * 1000, 0 if t == 0 else (start + t - 1) // 1000 - cid + 1)
+        start += t
+    key = lambda df: {
+        r.doc_id: (r.chunk_id, r.chunk_offset, r.n_chunks) for r in df.collect()
+    }
+    assert key(chunk_pack(src, 1000, "n_toks", shard_size=3)) == want
+    assert key(chunk_pack_sorted(src, 1000, "n_toks")) == want
+
+
+@pytest.mark.parametrize("col", ["chunk_id", "chunk_offset", "n_chunks"])
+def test_chunk_pack_rejects_output_column_collision(spark, col):
+    from geostatstransforms_jl_spark.textops import chunk_pack
+
+    df = spark.createDataFrame([(1, 3, 0)], f"doc_id long, n_toks long, {col} long")
+    with pytest.raises(ValueError, match=f"already has a '{col}' column"):
+        chunk_pack(df, 64, "n_toks")
+
+
+@pytest.mark.parametrize("col", ["_shard", "_local_end", "_before"])
+def test_chunk_pack_rejects_internal_column_collision(spark, col):
+    from geostatstransforms_jl_spark.textops import chunk_pack
+
+    df = spark.createDataFrame([(1, 3, 0)], f"doc_id long, n_toks long, {col} long")
+    with pytest.raises(ValueError, match=f"already has a '{col}' column"):
+        chunk_pack(df, 64, "n_toks")
+
+
+def test_chunk_pack_sorted_rejects_all_null_key_fragment(spark, tmp_path):
+    from geostatstransforms_jl_spark.textops import chunk_pack_sorted
+
+    path = str(tmp_path / "null_keys")
+    (spark.range(100, numPartitions=1)
+     .select(F.col("id").alias("doc_id"), F.lit(3).cast("long").alias("n_toks"))
+     .write.parquet(path))
+    (spark.createDataFrame([(None, 3), (None, 4)], "doc_id long, n_toks long")
+     .coalesce(1).write.mode("append").parquet(path))
+    with pytest.raises(ValueError, match="all NULL.*generic chunk_pack route"):
+        chunk_pack_sorted(spark.read.parquet(path), 64, "n_toks")
+
+
 def test_chunk_pack_sorted_matches_generic(spark, tmp_path):
     from geostatstransforms_jl_spark.textops import chunk_pack, chunk_pack_sorted
 
