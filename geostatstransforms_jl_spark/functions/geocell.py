@@ -190,7 +190,6 @@ def cell_pyramid(
     hll_lgk: int = 12,
     key_col: str = "zkey",
     level_col: str = "level",
-    persist: bool = True,
 ) -> DataFrame:
     """Multi-resolution tile pyramid: the ``tile_cells`` rollup at EVERY
     zoom level 0..`levels` in one pass over the data.  Level 0 is the
@@ -199,28 +198,22 @@ def cell_pyramid(
 
     The 100-TB contract is that the base data is scanned ONCE: the level-0
     hash aggregate is the only O(n_rows) Exchange, its O(occupied-cells)
-    result is persisted, and every coarser level re-aggregates that small
-    base — counts and sums add, min/max nest, and distinct-counting rides
-    DataSketches HLL (``hll_sketch_agg`` per base cell, ``hll_union_agg``
-    upward), whose register-max union makes "union of sketches" EQUAL
-    "sketch of the union" — the mergeability that exact distinct
-    fundamentally lacks (see ``tile_cells``' exact-vs-HLL measurement).
-    A naive ``GROUP BY`` per level re-reads the input once per level —
-    at 10¹² rows and 10 zoom levels that is 10 full scans for what this
+    result is materialized once, and every coarser level re-aggregates
+    that small base — counts and sums add, min/max nest, and
+    distinct-counting rides DataSketches HLL (``hll_sketch_agg`` per base
+    cell, ``hll_union_agg`` upward), whose register-max union makes "union
+    of sketches" EQUAL "sketch of the union" — the mergeability that exact
+    distinct fundamentally lacks (see ``tile_cells``' exact-vs-HLL
+    measurement).  A naive ``GROUP BY`` per level re-reads the input once
+    per level — at 10¹² rows and 10 zoom levels that is 10 full scans for what this
     plan does in one.
 
     Output: one row per (level, parent cell) with ``n_rows``,
     ``sum_<c>``/``min_<c>``/``max_<c>`` per caller column, and
-    ``n_distinct`` (HLL estimate) when `distinct_col` is given.  The
-    result is lazy, so the library cannot release the persisted base
-    itself; its handle is attached to the returned DataFrame as
-    ``out.gst_caches`` — long-lived sessions should
-    ``for c in out.gst_caches: c.unpersist()`` after materializing —
-    explicit persists are not freed by memory pressure (MEMORY_AND_DISK
-    spills instead of evicting), so an unreleased entry lives until
-    session end.  With ``persist=False`` the plan stays
-    pure (each level's branch recomputes the base — fine for small inputs
-    or when the caller persists the base themselves)."""
+    ``n_distinct`` (HLL estimate) when `distinct_col` is given.  The base
+    is computed at call time as a private ``localCheckpoint``: it belongs to
+    the returned plan, so Spark's ContextCleaner frees it with the result
+    and no DataFrame-cache entry outlives the call."""
     levels, outnames = _pyramid_contract(
         grid, levels, sum_cols, min_cols, max_cols, key_col, level_col
     )
@@ -228,9 +221,7 @@ def cell_pyramid(
     base_aggs = _pyramid_base_aggs(sum_cols, min_cols, max_cols)
     if distinct_col is not None:
         base_aggs.append(F.hll_sketch_agg(distinct_col, hll_lgk).alias("_hll"))
-    base = keyed.groupBy(key_col).agg(*base_aggs)
-    if persist:
-        base = base.persist()
+    base = keyed.groupBy(key_col).agg(*base_aggs).localCheckpoint(eager=True)
 
     def finish(lvl_df: DataFrame, lvl: int) -> DataFrame:
         out = lvl_df.withColumn(level_col, F.lit(lvl))
@@ -253,5 +244,4 @@ def cell_pyramid(
     out = tiers[0]
     for t in tiers[1:]:
         out = out.unionByName(t)
-    out.gst_caches = [base] if persist else []
     return out

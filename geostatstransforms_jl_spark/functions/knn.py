@@ -381,7 +381,6 @@ def _broadcast_knn(
     spdf = s.toPandas()
     S = spdf[list(sc)].to_numpy(dtype=float)
     s_ids = spdf[sid].to_numpy()
-    # deterministic tie-break pre-sort: stable argpartition order by id later
     s_cols = {c: spdf[c].to_numpy() for c in spdf.columns}
     n_s = len(spdf)
     kk = min(k, n_s)

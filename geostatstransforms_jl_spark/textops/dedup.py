@@ -220,58 +220,46 @@ def minhash_lsh_pairs(
 def minhash_dedup(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     k: int = 64, shingle: int = 3, bands: int = 16, rows: int = 4, threshold: float = 0.7,
-    max_bucket_size: int = _DefaultCap(1000), persist_sigs: bool = True,
+    max_bucket_size: int = _DefaultCap(1000),
 ) -> DataFrame:
     """Greedy near-dup removal: drop any document matched to a smaller id.
     (Union-find over components would also collapse chains; greedy matches
     the common training-pipeline policy and needs one anti-join.)
 
     The signature frame is referenced four times downstream (bucket count,
-    cap join-back, both self-join sides); without `persist_sigs` each
-    reference that Catalyst's exchange reuse can't collapse re-scans and
-    re-shingles the TEXT table — at corpus scale that is the whole dedup
-    bill paid multiple times.  The cache is the compact side (k longs ≈
-    k·8 B/doc vs the raw text), lazily populated, MEMORY_AND_DISK.  Pass
-    ``persist_sigs=False`` for a pure-lazy plan (e.g. composing into a
-    larger query you'll persist yourself); output is identical.
-
-    The library has no safe point to release the cache itself (the result
-    is lazy), so the handle is attached to the returned DataFrame as
-    ``out.gst_caches`` — long-lived sessions calling this in a loop should
-    ``for c in out.gst_caches: c.unpersist()`` once the result is
-    materialized; explicit persists are not freed by memory pressure
-    (MEMORY_AND_DISK spills instead of evicting), so an unreleased entry
-    lives until session end."""
-    sigs, pairs = _minhash_pair_graph(
+    cap join-back, both self-join sides); each reference that Catalyst's
+    exchange reuse can't collapse would re-scan and re-shingle the TEXT
+    table — at corpus scale that is the whole dedup bill paid multiple
+    times.  So the signatures (the compact side: k longs ≈ k·8 B/doc vs
+    the raw text) are computed once, at call time, as a private
+    ``localCheckpoint``: it belongs to the returned plan, so Spark's
+    ContextCleaner frees it with the result and no DataFrame-cache entry
+    outlives the call."""
+    pairs = _minhash_pair_graph(
         df, text_col, id_col, k, shingle, bands, rows, threshold,
-        max_bucket_size, persist_sigs, "minhash_dedup",
+        max_bucket_size, "minhash_dedup",
     )
     losers = pairs.select(F.col("b").alias(id_col)).distinct()
-    out = df.join(losers, id_col, "left_anti")
-    out.gst_caches = [sigs] if persist_sigs else []
-    return out
+    return df.join(losers, id_col, "left_anti")
 
 
 def _minhash_pair_graph(
     df, text_col, id_col, k, shingle, bands, rows, threshold,
-    max_bucket_size, persist_sigs, fn_name,
+    max_bucket_size, fn_name,
 ):
     """Shared signature→pair pipeline for the dedup policies: resolves the
-    cap, builds (optionally persisted) signatures, returns (sigs, pairs).
-    One copy, so cap semantics / signature options / cache contract cannot
-    silently diverge between policies."""
+    cap, checkpoints the signatures, returns the pair graph.  One copy, so
+    cap semantics / signature options cannot silently diverge between
+    policies."""
     max_bucket_size = _resolve_cap(max_bucket_size, "max_bucket_size", fn_name)
-    sigs = minhash_signatures(df, text_col, id_col, k, shingle)
-    if persist_sigs:
-        sigs = sigs.persist()
-    pairs = minhash_lsh_pairs(sigs, id_col, bands, rows, threshold, max_bucket_size)
-    return sigs, pairs
+    sigs = minhash_signatures(df, text_col, id_col, k, shingle).localCheckpoint(eager=True)
+    return minhash_lsh_pairs(sigs, id_col, bands, rows, threshold, max_bucket_size)
 
 
 def minhash_dedup_cc(
     df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
     k: int = 64, shingle: int = 3, bands: int = 16, rows: int = 4, threshold: float = 0.7,
-    max_bucket_size: int = _DefaultCap(1000), persist_sigs: bool = True,
+    max_bucket_size: int = _DefaultCap(1000),
 ) -> DataFrame:
     """Connected-components near-dup removal: build the LSH pair graph,
     collapse it with ``functions.graph.connected_components``, keep ONE
@@ -284,27 +272,18 @@ def minhash_dedup_cc(
     Cost over greedy: the O(log n)-round label-propagation loop on the
     PAIR graph only — the signature/banding bill is identical.  The loop
     is eager (it must converge before the survivor set is known), and
-    components come back as a lineage-free checkpoint — so unlike
-    ``minhash_dedup`` the signature cache is dead by return time and is
-    released HERE; ``out.gst_caches`` is always empty, nothing for the
-    caller to manage."""
+    components come back as a lineage-free checkpoint."""
     from ..functions.graph import connected_components
 
-    sigs, pairs = _minhash_pair_graph(
+    pairs = _minhash_pair_graph(
         df, text_col, id_col, k, shingle, bands, rows, threshold,
-        max_bucket_size, persist_sigs, "minhash_dedup_cc",
+        max_bucket_size, "minhash_dedup_cc",
     )
     comp = connected_components(pairs, src="a", dst="b")
-    if persist_sigs:
-        # comp is a localCheckpoint: no lineage back to sigs survives the
-        # eager loop, so the cache has no further reader — release it now
-        sigs.unpersist()
     losers = comp.filter(F.col("id") != F.col("component")).select(
         F.col("id").alias(id_col)
     )
-    out = df.join(losers, id_col, "left_anti")
-    out.gst_caches = []
-    return out
+    return df.join(losers, id_col, "left_anti")
 
 
 def simhash_64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:

@@ -68,6 +68,13 @@ def _floor_div(a, b: int):
     return F.call_function("div", a, F.lit(b)) - (a % F.lit(b) < 0).cast("long")
 
 
+def _null_msg(fn: str, col: str, what: str, n=None) -> str:
+    """The one rejection message both packing routes give for NULL inputs."""
+    rows = "" if n is None else f" in {n} row(s)"
+    return (f"{fn}: NULL {col!r} {what}{rows} — a NULL has no place in the "
+            "concatenation order; drop or fill it first")
+
+
 def chunk_pack(
     df: DataFrame,
     chunk_size: int,
@@ -102,6 +109,8 @@ def chunk_pack(
     constant-per-shard and monotone in the key's order (e.g. a date bucket
     for timestamp keys).  ``tokens_col`` must be non-negative; negative
     counts would silently corrupt every later offset, so validate upstream.
+    A NULL order key or token count fails the job (``raise_error``), as
+    the sorted route fails its pre-pass.
 
     Every input column rides along, THROUGH the exchange.  When only the
     assignment is needed, ``select(order_col, tokens_col)`` first so the
@@ -117,8 +126,16 @@ def chunk_pack(
     if shard_expr is None:
         shard_expr = _floor_div(F.col(order_col).cast("long"), shard_size)
     toks = F.col(tokens_col).cast("long")
+    # every row passes through _shard on both branches below
+    shard = (
+        F.when(F.col(order_col).isNull(),
+               F.raise_error(F.lit(_null_msg("chunk_pack", order_col, "order key"))))
+        .when(F.col(tokens_col).isNull(),
+              F.raise_error(F.lit(_null_msg("chunk_pack", tokens_col, "token count"))))
+        .otherwise(shard_expr)
+    )
 
-    keyed = df.withColumn("_shard", shard_expr)
+    keyed = df.withColumn("_shard", shard)
     w = (
         Window.partitionBy("_shard")
         .orderBy(order_col)
@@ -197,6 +214,9 @@ def chunk_pack_sorted(
       between the two passes aborts instead of mis-packing (discarded
       task output never commits, so the abort is clean).
 
+    NULL order keys and token counts are counted in the pre-pass and
+    rejected with a ``ValueError``, as the generic route rejects them.
+
     Unlike the generic route, ``order_col`` may be ANY orderable type
     (strings included) — no numeric shard arithmetic is involved.  The
     input must be a file-source scan (``input_file_name()`` identifies
@@ -222,16 +242,16 @@ def chunk_pack_sorted(
             F.sum("_t").alias("tot"),
             F.min("_k").alias("kmin"),
             F.max("_k").alias("kmax"),
+            F.count_if(F.col("_k").isNull()).alias("null_k"),
+            F.count_if(F.col("_t").isNull()).alias("null_t"),
         )
         .collect()
     )
+    for field, col, what in (("null_k", order_col, "order key"),
+                             ("null_t", tokens_col, "token count")):
+        if n_null := sum(r[field] for r in stats):
+            raise ValueError(_null_msg("chunk_pack_sorted", col, what, n_null))
     frags = [r for r in stats if r["n"] > 0]
-    if any(r["kmin"] is None for r in frags):
-        raise ValueError(
-            f"chunk_pack_sorted: a fragment's {order_col!r} keys are all "
-            "NULL — NULL keys are unorderable; layout contract violated; use "
-            "the generic chunk_pack route"
-        )
     if frags and all(r["_gst_file"] == "" for r in frags):
         raise ValueError(
             "chunk_pack_sorted: input is not a file-source scan "

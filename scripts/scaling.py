@@ -26,6 +26,8 @@ The protocol is the same for every surface:
   parallelism ratio; ``scaling_efficiency`` is the highest level's.
 * Each run also reports the SQL jobs and the shuffle, spill and Python bytes
   of its timed body, read from the SQL status store by perfbench's Tracer.
+* After every timed body the session's DataFrame cache must be empty: an
+  operator frees what it persisted, the caller releases nothing.
 
 Prints one JSON line on stdout and progress on stderr.  The fixture cache is
 the only file it writes.
@@ -509,6 +511,19 @@ def measure(s: Surface, p, run: Callable) -> dict:
     return out
 
 
+def timed(s: Surface, role: str, spark, p, fixture: str | None, level: int) -> dict:
+    """Run the surface's body (or its ``compare`` body) once; returns its
+    output fields with ``sec``.  Raises if the body left a DataFrame cache
+    entry behind."""
+    body = s.compare[1] if role == "compare" else s.body
+    t0 = time.perf_counter()
+    out = body(spark, p, fixture, level)
+    out.setdefault("sec", time.perf_counter() - t0)
+    if not spark._jsparkSession.sharedState().cacheManager().isEmpty():
+        raise RuntimeError(f"{p.surface} {role} left a DataFrame cache entry behind")
+    return out
+
+
 def _spawn(role: str, p, level: int, fixture: str | None) -> dict | None:
     """One fresh Python process (and JVM) running ``_child``."""
     r = subprocess.run(
@@ -543,12 +558,10 @@ def _child() -> None:
                       shuffle_partitions=p.shuffle_partitions)
     # warm the JVM and one Python worker per core before the timed window
     spark.range(level).repartition(level).mapInPandas(lambda it: it, "id long").count()
-    body = s.compare[1] if role == "compare" else s.body
     tracer = Tracer(True)
     span = tracer.open(name, None, 0, layer=name)
-    t0 = time.perf_counter()
-    out = body(spark, p, fixture, level)
-    sec = out.pop("sec", time.perf_counter() - t0)
+    out = timed(s, role, spark, p, fixture, level)
+    sec = out.pop("sec")
     Tracer.close(span)
     tracer.attach_sql(spark)
     spark.stop()

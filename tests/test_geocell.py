@@ -269,14 +269,13 @@ def test_cell_pyramid_scans_base_once_and_validates(spark):
     )
     grid = CellGrid.box2d(0.0, 0.0, 1.0, 1.0, 3)
     pyr = cell_pyramid(df, grid, sum_cols=("v",), levels=3)
-    try:
-        plan = pyr._jdf.queryExecution().executedPlan().toString()
-        # persisted base: coarser tiers re-aggregate the cached level-0
-        # rollup (one O(n) aggregate total), never the raw input again
-        assert "InMemoryTableScan" in plan or "TableCacheQueryStage" in plan
-        assert pyr.where(F.col("level") == 3).count() == 1
-    finally:
-        spark.catalog.clearCache()
+    plan = pyr._jdf.queryExecution().executedPlan().toString()
+    # coarser tiers re-aggregate the materialized level-0 rollup (one O(n)
+    # aggregate total), never the raw input again: the input's Range node
+    # is absent from the executed tier plan
+    assert "Range (" in df._jdf.queryExecution().executedPlan().toString()
+    assert "Range (" not in plan
+    assert pyr.where(F.col("level") == 3).count() == 1
 
     with pytest.raises(ValueError, match="levels"):
         cell_pyramid(df, grid, levels=9)

@@ -812,10 +812,7 @@ def test_streaming_cell_pyramid_parity(spark, tmp_path):
     got = {(r.level, r.zkey): (r.n_rows, r.sum_v, r.min_v, r.max_v)
            for r in spark.sql("select * from pyr_stream").collect()}
 
-    batch = cell_pyramid(
-        df, grid, sum_cols=("v",), min_cols=("v",), max_cols=("v",),
-        persist=False,
-    )
+    batch = cell_pyramid(df, grid, sum_cols=("v",), min_cols=("v",), max_cols=("v",))
     want = {(r.level, r.zkey): (r.n_rows, r.sum_v, r.min_v, r.max_v)
             for r in batch.collect()}
     assert got == want
@@ -855,10 +852,7 @@ def test_streaming_cell_pyramid_hostile_names(spark, tmp_path):
     assert q.awaitTermination(120)
     got = {(r["level"], r["cell key"]): (r["n_rows"], r["sum_v"])
            for r in spark.sql("select * from pyr_hostile").collect()}
-    batch = cell_pyramid(
-        df.drop("level"), grid, sum_cols=("v",), key_col="cell key",
-        persist=False,
-    )
+    batch = cell_pyramid(df.drop("level"), grid, sum_cols=("v",), key_col="cell key")
     want = {(r["level"], r["cell key"]): (r["n_rows"], r["sum_v"])
             for r in batch.collect()}
     assert got == want
@@ -913,7 +907,6 @@ def test_streaming_cell_pyramid_kill_resume(spark, tmp_path):
            for r in spark.sql("select * from pyr_phase2").collect()}
     want = {(r.level, r.zkey): (r.n_rows, r.sum_v)
             for r in cell_pyramid(
-                spark.read.parquet(str(src)), grid, sum_cols=("v",),
-                persist=False,
+                spark.read.parquet(str(src)), grid, sum_cols=("v",)
             ).collect()}
     assert got == want

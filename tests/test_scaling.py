@@ -1,5 +1,7 @@
 import argparse
+import dataclasses
 import json
+from types import SimpleNamespace
 
 import pytest
 
@@ -45,6 +47,32 @@ def test_protocol_rejects_identity_mismatch_between_levels():
     }
     with pytest.raises(RuntimeError, match="checksum differs"):
         scaling.measure(FAKE, p, _fake_run(canned, []))
+
+
+def _spark_with_cache(empty):
+    """Just enough of a SparkSession for ``scaling.timed``'s cache check."""
+    cache = SimpleNamespace(isEmpty=lambda: empty)
+    state = SimpleNamespace(cacheManager=lambda: cache)
+    return SimpleNamespace(_jsparkSession=SimpleNamespace(sharedState=lambda: state))
+
+
+def test_protocol_rejects_a_body_that_leaves_a_cache_entry():
+    surface = dataclasses.replace(
+        FAKE, body=lambda spark, p, fixture, level: {"checksum": 7},
+        compare=("naive", lambda spark, p, fixture, level: {"sec": 0.5, "checksum": 7}))
+    p = argparse.Namespace(surface="fake", levels=[1, 4], reps=1)
+
+    def run(leaky_level):
+        def go(role, level):
+            spark = _spark_with_cache(empty=level != leaky_level)
+            out = scaling.timed(surface, role, spark, p, None, level)
+            return {**out, "rate": 1.0 / max(out["sec"], 1e-9)}
+        return go
+
+    out = scaling.measure(surface, p, run(leaky_level=None))
+    assert out["best"]["naive_4"]["sec"] == 0.5
+    with pytest.raises(RuntimeError, match="fake run left a DataFrame cache entry behind"):
+        scaling.measure(surface, p, run(leaky_level=4))
 
 
 def test_fixture_tag_covers_called_helpers(monkeypatch):

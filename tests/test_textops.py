@@ -581,8 +581,34 @@ def test_chunk_pack_sorted_rejects_all_null_key_fragment(spark, tmp_path):
      .write.parquet(path))
     (spark.createDataFrame([(None, 3), (None, 4)], "doc_id long, n_toks long")
      .coalesce(1).write.mode("append").parquet(path))
-    with pytest.raises(ValueError, match="all NULL.*generic chunk_pack route"):
+    # a NULL key is a bad input, not a layout the generic route accepts
+    with pytest.raises(ValueError, match="NULL 'doc_id' order key in 2 row") as err:
         chunk_pack_sorted(spark.read.parquet(path), 64, "n_toks")
+    assert "generic" not in str(err.value)
+
+
+# ids (1, 2, NULL, NULL) with tokens (5, 7, 3, 4) once made the generic route
+# return 2 rows with doc 1 at chunk 1; a NULL count gave NULL chunk columns
+# there and corrupted the NEXT row's chunk_id on the sorted route
+@pytest.mark.parametrize("route", ["generic", "sorted"])
+@pytest.mark.parametrize("rows, bad", [
+    pytest.param([(1, 5), (2, 7), (None, 3), (None, 4)], "'doc_id' order key", id="null_key"),
+    pytest.param([(1, 5), (2, None), (3, 4), (4, 6)], "'n_toks' token count", id="null_count"),
+])
+def test_chunk_pack_rejects_null_inputs_on_both_routes(spark, tmp_path, route, rows, bad):
+    from pyspark.errors import SparkRuntimeException
+
+    from geostatstransforms_jl_spark.textops import chunk_pack, chunk_pack_sorted
+
+    df = spark.createDataFrame(rows, "doc_id long, n_toks long")
+    if route == "generic":
+        with pytest.raises(SparkRuntimeException, match=f"chunk_pack: NULL {bad}"):
+            chunk_pack(df, 4, "n_toks").collect()
+    else:
+        path = str(tmp_path / "nulls")
+        df.coalesce(1).write.parquet(path)
+        with pytest.raises(ValueError, match=f"chunk_pack_sorted: NULL {bad}"):
+            chunk_pack_sorted(spark.read.parquet(path), 4, "n_toks")
 
 
 def test_chunk_pack_sorted_matches_generic(spark, tmp_path):
